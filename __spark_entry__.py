@@ -145,26 +145,8 @@ def _q_seq_unique_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_seq_unique_violations_digest(spark: SparkSession,
-                                    sf_dir: str) -> DataFrame:
-    """Uniqueness via the opt-in digest-prefilter route (checks/core.py:
-    _unique_per_part_digest — the network-bound-cluster shuffle shape:
-    8-byte digests through the all-to-all, exact confirm of colliding
-    groups only). Outputs are EXACT by construction, so the same brute
-    SQL oracle applies; equivalence to the direct route is additionally
-    pinned in tests/test_checks.py."""
-    seq = load_sequences(spark, sf_dir)
-    res = run_checks(seq, [Check("uniq", "unique",
-                                 {"key": "doc_id",
-                                  "digest_prefilter": True})])
-    return res.violations.select(
-        "partition_id", "doc_id",
-        F.col("observed").cast("bigint").alias("dup_cnt"),
-    )
-
-
 def _q_seq_referential_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential check: source ∉ allowed dimension (broadcast anti-join)."""
+    """Referential check: source ∉ allowed set (fused IN-list predicate)."""
     seq = load_sequences(spark, sf_dir)
     res = run_checks(seq, [Check("ref", "referential",
                                  {"column": "source",
@@ -185,8 +167,8 @@ def _q_seq_ntok_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_seq_token_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-id vocabulary-bounds check (checks/core.py token_range; fusible
-    in checks/fused.py): rows whose token array holds an id outside
+    """Token-id vocabulary-bounds check (token_range, executed by the fused
+    builder in checks/fused.py): rows whose token array holds an id outside
     [2000, 48000) — two-sided bounds that deliberately cut into the
     fixture's realized md5-token id range [1658, 48113], so BOTH predicate
     ends produce deterministic violations (the fixture's own word pool
@@ -1150,7 +1132,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ev_topn": _q_ev_topn,
         "emb_ann_ivf": _q_emb_ann_ivf,
         "emb_cosine_pairs": _q_emb_cosine_pairs,
-        "seq_unique_violations_digest": _q_seq_unique_violations_digest,
         "seq_token_range": _q_seq_token_range,
     }
 
@@ -2163,14 +2144,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE tokens IS NOT NULL
               AND len(list_filter(tokens,
                       t -> t IS NULL OR t < 2000 OR t >= 48000)) > 0
-        """,
-        # digest-prefilter route emits EXACT outputs — same oracle as the
-        # direct unique check
-        "seq_unique_violations_digest": f"""
-            SELECT source AS partition_id, doc_id, COUNT(*) AS dup_cnt
-            FROM {_SEQ}
-            GROUP BY source, doc_id
-            HAVING COUNT(*) > 1
         """,
         "tpch_pricing_summary": """
             SELECT l_returnflag, l_linestatus,

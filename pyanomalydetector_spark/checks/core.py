@@ -20,15 +20,12 @@ Check kinds and their reference lineage:
 - ``column_stats``     — per-partition sufficient stats of a numeric column
   (stats.py:75-79, 130-135) with min-count gating (detector.py:192
   ``cnt > trends_min_count``).
-- ``zscore_threshold`` — detect1 semantics (detector.py:211): partition mean
-  deviates from baseline mean by more than λ·σ, guarded by the relative-diff
-  filter (detector.py:218 — the reference has an operator-precedence bug
-  there: ``mean_t > 0 & (...)`` binds as ``mean_t > (0 & (...))``; we
-  implement the *intended* semantics ``mean_t > 0 AND reldiff > rate`` and
-  pin that choice in tests).
+- ``zscore_threshold`` — detect1 semantics (detector.py:211, 218): partition
+  mean deviates from baseline mean by more than λ·σ, guarded by the
+  relative-diff filter.
 - ``unique``           — doc_id uniqueness via two-phase salted aggregation
   (skew-proof groupBy; exact duplicate emission).
-- ``referential``      — membership of ``source`` in an allowed dimension
+- ``referential``      — membership of ``source`` in an allowed value list
   (models/anomalies.py:94-104 anti-join discipline).
 - ``n_tok_consistency``— metadata invariant ``n_tok == size(tokens)``.
 - ``token_range``      — token-id vocabulary bounds: every array element
@@ -38,6 +35,15 @@ Check kinds and their reference lineage:
   xxhash64+length prefilter, exact array compare on candidates.
 - ``drift_psi`` / ``drift_ks`` — distribution drift vs pinned baseline
   (recasting detect2/3's recent-vs-historical comparisons; see drift.py).
+
+``column_stats``, ``zscore_threshold``, ``referential``,
+``n_tok_consistency``, ``token_range`` and ``drift_psi`` (unless it carries
+a raw ``baseline`` frame) have ONE definition each, in checks/fused.py,
+whose builder is their only executor — a one-check suite is a fused plan of
+one. Their semantic rules (zscore's rel-diff precedence, n_tok's NULL
+safety, token_range's NULL array vs NULL element) are documented there.
+``unique``, ``token_invariant``, ``drift_ks`` and raw-baseline ``drift_psi``
+need their own shuffle and keep their plans in this module.
 
 Scale posture: every check is a groupBy/join plan whose shuffled data is
 O(#partitions) or O(#violations), never O(rows) beyond the initial scan; the
@@ -55,7 +61,6 @@ from pyspark.sql.types import (
     BooleanType, DoubleType, LongType, StringType, StructField, StructType,
 )
 
-from pyanomalydetector_spark.functions.stats import sufficient_stats, finalize_mean_std
 from pyanomalydetector_spark.checks.drift import psi_by_partition, ks_by_partition
 
 VERDICT_SCHEMA = StructType([
@@ -162,90 +167,6 @@ def _finish_violations(v: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------- checks ----
 
-def _check_column_stats(df: DataFrame, check: Check, pcol: str) -> CheckResult:
-    value_col = check.params.get("value_col", "n_tok")
-    min_count = int(check.params.get("min_count", 1))
-
-    stats = finalize_mean_std(sufficient_stats(df, [pcol], value_col)) \
-        .withColumnRenamed(pcol, "partition_id")
-    verdicts = stats.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (F.col("cnt") >= min_count).alias("passed"),
-        F.col("cnt").cast("double").alias("observed"),
-        F.lit(float(min_count)).alias("expected"),
-        F.lit(float(min_count)).alias("threshold"),
-        F.lit(0).alias("n_violations"),
-        F.col("cnt").alias("rows_scanned"),
-    )
-    return CheckResult(_finish_verdicts(verdicts),
-                       _empty(df.sparkSession, VIOLATION_SCHEMA))
-
-
-def _check_zscore_threshold(df: DataFrame, check: Check, pcol: str) -> CheckResult:
-    """detect1: partition mean vs pinned baseline mean/std with λ·σ + rel-diff.
-
-    Row-level violations replicate _filter_anomalies (detector.py:382-404):
-    within failing partitions, rows whose value exceeds baseline mean ± λ·σ.
-    """
-    value_col = check.params.get("value_col", "n_tok")
-    lam = float(check.params.get("lambda", 2.0))
-    ignore_diff_rate = float(check.params.get("ignore_diff_rate", 0.0))
-    baseline = check.params.get("baseline")  # optional DataFrame(mean, std)
-    scalars = check.params.get("baseline_scalars")  # pinned {mean, std}
-
-    if scalars is not None:
-        baseline = df.sparkSession.createDataFrame(
-            [(float(scalars["mean"]), float(scalars["std"]))], "mean double, std double")
-    elif baseline is None:
-        baseline = finalize_mean_std(
-            sufficient_stats(df.select(F.lit("all").alias("_g"), value_col),
-                             ["_g"], value_col)).select("mean", "std")
-    base = F.broadcast(baseline.select(F.col("mean").alias("mean_t"),
-                                       F.col("std").alias("std_t")))
-
-    part_means = finalize_mean_std(sufficient_stats(df, [pcol], value_col)) \
-        .select(F.col(pcol).alias("partition_id"),
-                F.col("mean").alias("mean_h"),
-                F.col("cnt").alias("rows_scanned"))
-
-    j = part_means.crossJoin(base)
-    dev = F.abs(F.col("mean_h") - F.col("mean_t"))
-    # detector.py:211 threshold; detector.py:218 *intended* rel-diff guard.
-    # try_divide keeps this ANSI-safe when mean_t == 0 (NULL → fail is false).
-    fail = (dev > lam * F.col("std_t")) & \
-           (F.col("mean_t") > 0) & \
-           (F.try_divide(dev, F.col("mean_t")) > ignore_diff_rate)
-    verdicts = j.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (~fail).alias("passed"),
-        F.col("mean_h").alias("observed"),
-        F.col("mean_t").alias("expected"),
-        (lam * F.col("std_t")).alias("threshold"),
-        F.lit(0).alias("n_violations"),
-        F.col("rows_scanned"),
-    )
-
-    failing = j.filter(fail).select("partition_id", "mean_t", "std_t")
-    viol = (
-        # NULL-SAFE: a failing NULL partition's rows must still emit
-        # violations (plain equality would silently drop them)
-        df.join(F.broadcast(failing), df[pcol].eqNullSafe(failing["partition_id"]))
-          .filter(F.abs(F.col(value_col) - F.col("mean_t")) > lam * F.col("std_t"))
-          .select(
-              F.col("partition_id"),
-              F.lit(check.check_id).alias("check_id"),
-              F.col("doc_id"),
-              F.col(value_col).cast("string").alias("observed"),
-              F.concat(F.lit("within "), F.round("mean_t", 6).cast("string"),
-                       F.lit(" ± "), F.round(lam * F.col("std_t"), 6).cast("string"))
-               .alias("expected"),
-          )
-    )
-    return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol))
-
-
 def _unique_per_part(df: DataFrame, key: str, pcol: str,
                      salt_buckets: int = 0,
                      max_dup_emit: int = 100_000) -> DataFrame:
@@ -265,16 +186,18 @@ def _unique_per_part(df: DataFrame, key: str, pcol: str,
     persists it, hiding the shared exchange behind an InMemoryTableScan
     from consumers).
 
-    Considered and measured (round 4): a digest-prefilter variant (shuffle
-    ``xxhash64(key)`` — 8 B — then re-scan + exact-confirm only colliding
-    hash groups, the token_invariant/exact-dedup discipline). The hash
-    shuffle alone is 1.6× faster (9.9 s → 6.2 s at 32M/local[32]), but the
-    confirm pass needs a second full (pcol, key) scan (~3.5 s), landing at
-    parity locally. On a multi-executor cluster the trade leans the other
-    way (scans are node-local, shuffles are all-to-all network), so a
-    deployment bottlenecked on the unique shuffle's network volume should
-    revisit it; here the single-shuffle direct aggregation is kept — one
-    scan, exact by construction, and the salt knob still applies.
+    Considered and measured: a digest-prefilter variant (shuffle an 8-byte
+    ``xxhash64(partition, key)``, then re-scan and exact-confirm only the
+    colliding digest groups, the token_invariant/exact-dedup discipline).
+    The hash shuffle alone is 1.6× faster (9.9 s → 6.2 s at 32M/local[32]),
+    but the confirm pass needs a second full (pcol, key) scan, and the whole
+    route measured 9.2 s against 5.3 s direct at 32M rows. On a
+    multi-executor cluster the trade leans the other way (scans are
+    node-local, shuffles are all-to-all network), so a deployment
+    bottlenecked on the unique shuffle's network volume with wide keys
+    should revisit it; here the single-shuffle direct aggregation is the
+    only route — one scan, exact by construction, and the salt knob still
+    applies.
     """
     if salt_buckets > 0:
         # the salt only needs to spread a hot key's rows across buckets;
@@ -307,23 +230,15 @@ def _unique_per_part(df: DataFrame, key: str, pcol: str,
         F.sum(F.when(F.col("cnt") > 1, 1).otherwise(0)).alias("n_dup_keys"),
         F.sum("cnt").alias("rows_scanned"),
     )
-    return _attach_dup_lists(scalars, counts.filter(F.col("cnt") > 1),
-                             key, max_dup_emit)
-
-
-def _attach_dup_lists(scalars: DataFrame, dup_rows: DataFrame, key: str,
-                      max_dup_emit: int) -> DataFrame:
-    """Attach the capped duplicate list to the per-partition scalar rollup.
-
-    ``dup_rows`` is (partition_id, <key>, cnt) with cnt > 1 only — bounded
-    by #violations, never the corpus. Bound the per-partition array: rank
-    duplicates (worst first) and keep the top ``max_dup_emit``;
-    determinism via the (cnt desc, key) order.
-    """
+    # the dup branch sees cnt > 1 rows only — bounded by #violations, never
+    # the corpus. Bound the per-partition array: rank duplicates (worst
+    # first) and keep the top ``max_dup_emit``; determinism via the
+    # (cnt desc, key) order.
     w_rank = Window.partitionBy("partition_id") \
                    .orderBy(F.col("cnt").desc(), F.col(key))
-    dup_rows = dup_rows.withColumn("_rn", F.row_number().over(w_rank)) \
-                       .filter(F.col("_rn") <= max_dup_emit).drop("_rn")
+    dup_rows = counts.filter(F.col("cnt") > 1) \
+                     .withColumn("_rn", F.row_number().over(w_rank)) \
+                     .filter(F.col("_rn") <= max_dup_emit).drop("_rn")
     dup_lists = dup_rows.groupBy(
         F.col("partition_id").alias("_dp")).agg(
         F.collect_list(F.struct(F.col(key).alias("k"),
@@ -338,82 +253,6 @@ def _attach_dup_lists(scalars: DataFrame, dup_rows: DataFrame, key: str,
     return scalars.join(
         dup_lists, scalars["partition_id"].eqNullSafe(dup_lists["_dp"]),
         "left").drop("_dp")
-
-
-def _unique_per_part_digest(df: DataFrame, key: str, pcol: str,
-                            max_dup_emit: int = 100_000) -> DataFrame:
-    """Digest-prefilter uniqueness rollup — same output contract as
-    :func:`_unique_per_part` (``(partition_id, n_keys, n_dup_keys,
-    rows_scanned, _dups)``, all EXACT), different shuffle shape.
-
-    Two passes: (1) shuffle only an 8-byte ``xxhash64(partition, key)``
-    digest and count per digest — the big all-to-all moves 8 B/row instead
-    of the full key payload (the round-4 measurement in
-    :func:`_unique_per_part`'s docstring: the hash shuffle alone is 1.6×
-    faster at 32M rows); (2) semi-join the scan back to the COLLIDING
-    digests only and group exactly by (partition, real key) — duplicate
-    counts and dup lists are exact by construction, and a 64-bit collision
-    between distinct keys costs only a wasted exact-confirm row (it groups
-    to cnt=1 and is dropped), never a wrong answer.
-
-    Exactness bookkeeping for ``n_keys``: distinct digests undercount by
-    one per colliding digest that holds two distinct real keys, so
-    ``n_keys = (distinct digests − colliding digests) + (distinct real
-    keys inside colliding digests)`` — the last two terms come from the
-    confirm pass.
-
-    The trade vs the direct aggregation, measured at 32M rows/local[32]
-    (round 5, warm min-of-3): direct 5.3 s, digest 9.2 s — locally the
-    shuffle is memory-speed so the payload saving buys nothing and the
-    confirm re-scan is pure overhead. The digest route exists for
-    network-shuffled clusters where the all-to-all is the bottleneck and
-    the key is wider than its 8-byte digest (URLs, long doc ids): there
-    the big shuffle's bytes drop by the key/digest width ratio and the
-    confirm pass touches only colliding groups. Opt-in
-    (``digest_prefilter: True``), never the default.
-    """
-    base = df.select(F.col(pcol).alias("partition_id"), F.col(key))
-    # one digest over (partition, key): the confirm semi-join can then key
-    # on the digest alone (never NULL — xxhash64 of a NULL field is the
-    # seed hash), sidestepping NULL-partition equality; a cross-partition
-    # digest collision only adds a wasted exact-confirm row
-    hashed = base.withColumn("_ph", F.xxhash64("partition_id", F.col(key)))
-    hcounts = hashed.groupBy("partition_id", "_ph") \
-                    .agg(F.count(F.lit(1)).alias("cnt"))
-    scalars0 = hcounts.groupBy("partition_id").agg(
-        F.count(F.lit(1)).alias("_n_digests"),
-        F.sum(F.when(F.col("cnt") > 1, 1).otherwise(0)).alias("_n_colliding"),
-        F.sum("cnt").alias("rows_scanned"),
-    )
-    # the colliding set keys on (partition, digest), NULL-SAFE on the
-    # partition: a digest-only semi-join could pull in a row from ANOTHER
-    # partition that shares the digest by 64-bit accident, and that row
-    # would inflate its own partition's n_keys via _k_distinct (its digest
-    # is already counted in _n_digests)
-    coll = hcounts.filter(F.col("cnt") > 1) \
-                  .select(F.col("partition_id").alias("_kp"),
-                          F.col("_ph").alias("_kh"))
-    confirm = (hashed.join(
-            coll,
-            (hashed["_ph"] == coll["_kh"])
-            & hashed["partition_id"].eqNullSafe(coll["_kp"]), "left_semi")
-                     .groupBy("partition_id", key)
-                     .agg(F.count(F.lit(1)).alias("cnt")))
-    per_confirm = confirm.groupBy(F.col("partition_id").alias("_cp")).agg(
-        F.count(F.lit(1)).alias("_k_distinct"),
-        F.sum(F.when(F.col("cnt") > 1, 1).otherwise(0)).alias("n_dup_keys"),
-    )
-    scalars = (scalars0.join(
-            per_confirm,
-            scalars0["partition_id"].eqNullSafe(per_confirm["_cp"]), "left")
-        .drop("_cp")
-        .na.fill({"_k_distinct": 0, "n_dup_keys": 0})
-        .select("partition_id",
-                (F.col("_n_digests") - F.col("_n_colliding")
-                 + F.col("_k_distinct")).alias("n_keys"),
-                "n_dup_keys", "rows_scanned"))
-    return _attach_dup_lists(scalars, confirm.filter(F.col("cnt") > 1),
-                             key, max_dup_emit)
 
 
 def _check_unique(df: DataFrame, check: Check, pcol: str) -> CheckResult:
@@ -433,20 +272,9 @@ def _check_unique(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     (e.g. collecting the duplicate rows themselves) or sort-based fallback
     paths. Skewed *joins* elsewhere in the engine are covered by AQE
     (session.py: spark.sql.adaptive.skewJoin.enabled).
-
-    ``digest_prefilter: True`` routes to :func:`_unique_per_part_digest` —
-    the all-to-all shuffles an 8-byte digest instead of the key payload and
-    only colliding digest groups are exact-confirmed. Same exact outputs;
-    the right trade on network-shuffled clusters with wide keys (see the
-    variant's docstring). Mutually exclusive with ``salt_buckets`` (digest
-    groups are high-cardinality by construction, salting adds nothing).
     """
     key = check.params.get("key", "doc_id")
     salt_buckets = int(check.params.get("salt_buckets", 0))
-    digest_prefilter = bool(check.params.get("digest_prefilter", False))
-    if digest_prefilter and salt_buckets:
-        raise ValueError("unique check: digest_prefilter and salt_buckets "
-                         "are mutually exclusive")
     # ``max_dup_emit``: per-partition cap on EMITTED duplicate rows (the
     # verdict's n_violations stays exact; see _unique_per_part)
     max_dup_emit = int(check.params.get("max_dup_emit", 100_000))
@@ -460,12 +288,8 @@ def _check_unique(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     # defers it to materialize(), where every cached frame's first count
     # runs CONCURRENTLY with the others — the unique shuffle now overlaps
     # the fused aggregate pass (measured 53 s → ~44 s at local[4]/32M).
-    if digest_prefilter:
-        per_part = _unique_per_part_digest(df, key, pcol,
-                                           max_dup_emit).persist()
-    else:
-        per_part = _unique_per_part(df, key, pcol, salt_buckets,
-                                    max_dup_emit).persist()
+    per_part = _unique_per_part(df, key, pcol, salt_buckets,
+                                max_dup_emit).persist()
 
     dups = per_part.select(
         "partition_id", F.explode("_dups").alias("d")
@@ -489,142 +313,6 @@ def _check_unique(df: DataFrame, check: Check, pcol: str) -> CheckResult:
     )
     return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol),
                        cached=(per_part,))
-
-
-def _check_referential(df: DataFrame, check: Check, pcol: str) -> CheckResult:
-    """source ∈ allowed-dimension membership (broadcast anti-join)."""
-    column = check.params.get("column", "source")
-    allowed = check.params.get("allowed")
-    spark = df.sparkSession
-    if isinstance(allowed, (list, tuple, set)):
-        dim = spark.createDataFrame([(a,) for a in sorted(allowed)], f"{column} string")
-    else:
-        dim = allowed  # a DataFrame with one column named ``column``
-
-    viol_rows = df.join(F.broadcast(dim), on=column, how="left_anti")
-    per_part = df.groupBy(F.col(pcol).alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned"))
-    bad_per_part = viol_rows.groupBy(F.col(pcol).alias("_bp")) \
-                            .agg(F.count(F.lit(1)).alias("n_bad"))
-    # NULL-SAFE: a NULL partition's bad-row count must attach to its verdict
-    # (plain equality would fill 0 and report a false pass)
-    verdicts = per_part.join(
-            bad_per_part,
-            per_part["partition_id"].eqNullSafe(bad_per_part["_bp"]), "left") \
-        .drop("_bp") \
-        .na.fill({"n_bad": 0}) \
-        .select(
-            "partition_id",
-            F.lit(check.check_id).alias("check_id"),
-            (F.col("n_bad") == 0).alias("passed"),
-            F.col("n_bad").cast("double").alias("observed"),
-            F.lit(0.0).alias("expected"),
-            F.lit(0.0).alias("threshold"),
-            F.col("n_bad").alias("n_violations"),
-            F.col("rows_scanned"),
-        )
-    viol = viol_rows.select(
-        F.col(pcol).alias("partition_id"),
-        F.lit(check.check_id).alias("check_id"),
-        F.col("doc_id"),
-        F.col(column).cast("string").alias("observed"),
-        F.lit("member of allowed source set").alias("expected"),
-    )
-    return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol))
-
-
-def _check_n_tok_consistency(df: DataFrame, check: Check, pcol: str) -> CheckResult:
-    """Metadata invariant: declared n_tok equals size(tokens).
-
-    NULL-SAFE: plain ``!=`` evaluates to NULL when either side is NULL
-    (``size(NULL)`` is NULL in non-legacy Spark), so a row with NULL
-    metadata but non-NULL tokens — or vice versa — would silently PASS
-    the invariant. ``<=>`` makes the contradiction count; NULL on BOTH
-    sides (no declared count, no tokens) is consistent and passes."""
-    bad = ~F.col("n_tok").eqNullSafe(F.size("tokens"))
-    per_part = df.groupBy(F.col(pcol).alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned"),
-        F.sum(F.when(bad, 1).otherwise(0)).alias("n_bad"),
-    )
-    verdicts = per_part.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (F.col("n_bad") == 0).alias("passed"),
-        F.col("n_bad").cast("double").alias("observed"),
-        F.lit(0.0).alias("expected"),
-        F.lit(0.0).alias("threshold"),
-        F.col("n_bad").alias("n_violations"),
-        F.col("rows_scanned"),
-    )
-    viol = df.filter(bad).select(
-        F.col(pcol).alias("partition_id"),
-        F.lit(check.check_id).alias("check_id"),
-        F.col("doc_id"),
-        F.col("n_tok").cast("string").alias("observed"),
-        F.size("tokens").cast("string").alias("expected"),
-    )
-    return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol))
-
-
-def _check_token_range(df: DataFrame, check: Check, pcol: str) -> CheckResult:
-    """Token-id vocabulary-bounds check: every element of the token array
-    must be non-NULL and lie in ``[min_value, max_value)`` — the tokenized-
-    corpus analog of the reference's hard threshold predicate (detect1's
-    absolute limits, /root/reference/data_processing/detector.py:211): a
-    token id outside the tokenizer's vocabulary, or a NULL element, proves
-    upstream corruption regardless of any distribution.
-
-    Semantics (pinned by tests/test_checks.py + the cross-engine fuzz):
-
-    - a NULL tokens ARRAY passes — array presence/length is
-      ``n_tok_consistency``'s contract, not range's;
-    - a NULL ELEMENT violates (no real tokenizer emits NULL);
-    - violation rows carry the FIRST offending element (``'NULL'`` for a
-      NULL element) and the bound as ``expected``.
-
-    Plan shape: one pruned scan → groupBy(partition) conditional sum over
-    an ``exists()`` array predicate (whole-stage codegen, shuffle
-    O(#partitions)); violations are a filter branch of the same scan
-    (O(#violations)). Fully fusible (checks/fused.py) — inside the fused
-    suite this check costs ZERO extra passes.
-    """
-    col = check.params.get("value_col", "tokens")
-    lo = int(check.params.get("min_value", 0))
-    hi = int(check.params["max_value"])
-
-    def bad_elem(t: Column) -> Column:
-        # single-arg lambda with lo/hi captured by closure (a 2-arg lambda
-        # would be called as (element, index) — CLAUDE.md); the predicate
-        # is never NULL because t.isNull() absorbs the NULL element case
-        return t.isNull() | (t < F.lit(lo)) | (t >= F.lit(hi))
-
-    arr = F.col(col)
-    row_bad = F.when(arr.isNull(), F.lit(False)).otherwise(F.exists(arr, bad_elem))
-    per_part = df.groupBy(F.col(pcol).alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows_scanned"),
-        F.sum(F.when(row_bad, 1).otherwise(0)).alias("n_bad"),
-    )
-    verdicts = per_part.select(
-        "partition_id",
-        F.lit(check.check_id).alias("check_id"),
-        (F.col("n_bad") == 0).alias("passed"),
-        F.col("n_bad").cast("double").alias("observed"),
-        F.lit(0.0).alias("expected"),
-        F.lit(0.0).alias("threshold"),
-        F.col("n_bad").alias("n_violations"),
-        F.col("rows_scanned"),
-    )
-    # try_element_at: ANSI-safe on the (unreachable) empty-filter case —
-    # row_bad guarantees at least one offending element survives the filter
-    first_bad = F.try_element_at(F.filter(arr, bad_elem), F.lit(1))
-    viol = df.filter(row_bad).select(
-        F.col(pcol).alias("partition_id"),
-        F.lit(check.check_id).alias("check_id"),
-        F.col("doc_id"),
-        F.coalesce(first_bad.cast("string"), F.lit("NULL")).alias("observed"),
-        F.lit(f"token id in [{lo}, {hi})").alias("expected"),
-    )
-    return CheckResult(_finish_verdicts(verdicts), _finish_violations(viol))
 
 
 def _token_digest_join(df: DataFrame, expected_df: DataFrame,
@@ -761,22 +449,12 @@ def _check_drift(df: DataFrame, check: Check, pcol: str, stat: str) -> CheckResu
     cache_registry: list = []
 
     if stat == "psi":
-        pinned = check.params.get("pinned_hist")
-        if pinned is not None:
-            from pyanomalydetector_spark.checks.drift import psi_by_partition_pinned
-            scored = psi_by_partition_pinned(
-                df, pcol, value_col, pinned["lo"], pinned["hi"],
-                pinned["counts"], pinned["n_base"])
-        else:
-            scored = psi_by_partition(
-                df, pcol, value_col,
-                n_buckets=int(check.params.get("buckets", 10)),
-                baseline=baseline, cache_registry=cache_registry,
-                # opt-in one-scan route for structurally bounded columns
-                # (token length is capped by the context size); unbounded
-                # continuous columns keep the two-pass fixed-width path
-                low_cardinality=bool(check.params.get("low_cardinality",
-                                                      False)))
+        # only a raw ``baseline`` frame lands here: self- and pinned-baseline
+        # PSI are fusible and run in checks/fused.py
+        scored = psi_by_partition(
+            df, pcol, value_col,
+            n_buckets=int(check.params.get("buckets", 10)),
+            baseline=baseline)
         obs = "psi"
     else:
         base_counts = check.params.get("baseline_counts")
@@ -817,13 +495,10 @@ def _check_drift(df: DataFrame, check: Check, pcol: str, stat: str) -> CheckResu
                        cached=tuple(cache_registry))
 
 
+# the kinds that keep their own plans; every other kind runs in the fused
+# builder (checks/fused.py:is_fusible)
 _DISPATCH = {
-    "column_stats": _check_column_stats,
-    "zscore_threshold": _check_zscore_threshold,
     "unique": _check_unique,
-    "referential": _check_referential,
-    "n_tok_consistency": _check_n_tok_consistency,
-    "token_range": _check_token_range,
     "token_invariant": _check_token_invariant,
     "drift_psi": lambda df, c, p: _check_drift(df, c, p, "psi"),
     "drift_ks": lambda df, c, p: _check_drift(df, c, p, "ks"),
@@ -831,15 +506,19 @@ _DISPATCH = {
 
 
 def run_checks(df: DataFrame, checks: Iterable[Check],
-               partition_col: str = "source", fuse: bool = True) -> CheckResult:
-    """Run a suite of checks; union the per-check verdict/violation frames.
+               partition_col: str = "source") -> CheckResult:
+    """Run a suite of checks; union their verdict/violation frames.
 
-    With ``fuse=True`` (default), aggregate-style checks execute on the fused
-    two-scan path (checks/fused.py): one groupBy pass computes every
-    per-partition aggregate, one filter pass emits every row-level violation —
-    at 100 TB this is the difference between 2 and 7+ full table scans. Checks
-    whose semantics need their own shuffle (``unique``, ``drift_ks``,
-    ``token_invariant``) or carry DataFrame-valued params keep per-check plans.
+    Every fusible check (checks/fused.py) executes in the fused two-scan
+    plan: one groupBy pass computes every per-partition aggregate, one
+    filter pass emits every row-level violation — at 100 TB this is the
+    difference between 2 and 7+ full table scans. A one-check suite is a
+    fused plan of one. Checks whose semantics need their own shuffle
+    (``unique``, ``drift_ks``, ``token_invariant``, and ``drift_psi``
+    against a raw ``baseline`` frame) keep their own plans.
+
+    ``referential`` takes its allowed set as a list of values; a
+    DataFrame-valued ``allowed`` raises ``ValueError``.
 
     The input is deliberately NOT cached: each pass re-scans the columnar
     source with column pruning (a pass that only needs ``n_tok`` reads only
@@ -847,25 +526,29 @@ def run_checks(df: DataFrame, checks: Iterable[Check],
     memory — at 10¹²-row scale the input never fits cache, so the engine is
     designed around cheap pruned re-scans instead.
     """
-    from pyanomalydetector_spark.checks.fused import run_fused, split_fusible
+    from pyanomalydetector_spark.checks.fused import run_fused, is_fusible
 
     spark = df.sparkSession
     checks = list(checks)
     verdict_frames: list[DataFrame] = []
     violation_frames: list[DataFrame] = []
 
-    fused, rest = split_fusible(checks) if fuse else ([], checks)
-    if len(fused) < 2:          # fusion only pays when scans are shared
-        rest, fused = checks, []
-
+    for check in checks:
+        if check.kind == "referential" and not isinstance(
+                check.params.get("allowed"), (list, tuple, set)):
+            raise ValueError(
+                f"referential check {check.check_id!r}: 'allowed' must be a "
+                "list of values, not a DataFrame")
+    fused = [c for c in checks if is_fusible(c)]
+    rest = [c for c in checks if not is_fusible(c)]
     for check in rest:
         if _DISPATCH.get(check.kind) is None:
             raise ValueError(f"unknown check kind {check.kind!r}")
 
-    # The fused pass and the eager per-check plans (unique's checkpoint)
-    # each materialize via their own Spark jobs; submitting them from
-    # concurrent threads lets the scheduler overlap their stages instead of
-    # idling cores between sequential jobs (Spark actions are thread-safe).
+    # The fused pass and the per-kind plans each materialize via their own
+    # Spark jobs; submitting them from concurrent threads lets the scheduler
+    # overlap their stages instead of idling cores between sequential jobs
+    # (Spark actions are thread-safe).
     from concurrent.futures import ThreadPoolExecutor
 
     def run_rest(check):

@@ -41,10 +41,12 @@ def _pid_nullsafe_join(left: DataFrame, right: DataFrame, key2: str | None,
 
 def _bucket_expr(value: Column, lo, hi, n_buckets: int) -> Column:
     """Fixed-width bucket index over [lo, hi] with edge clamping — the ONE
-    definition every PSI path (self-baseline, explicit-baseline,
-    low-cardinality, pinned) derives from, mirrored by the DuckDB oracle.
-    Degenerate range (or empty input) → bucket 0; a NULL value coerces to
-    bucket 0 via the null-skipping greatest, identically in both engines.
+    Column-DSL definition (:func:`psi_by_partition` and the checkpoint
+    baseline capture, plans/checkpoint.py:compute_baseline); the fused
+    builder spells the same operators as SQL (checks/fused.py), and the
+    DuckDB oracle mirrors both. Degenerate range (or empty input) → bucket
+    0; a NULL value coerces to bucket 0 via the null-skipping greatest,
+    identically in both engines.
     """
     if lo is None or hi == lo:
         return F.lit(0)
@@ -53,33 +55,19 @@ def _bucket_expr(value: Column, lo, hi, n_buckets: int) -> Column:
     return F.least(F.greatest(raw, F.lit(0)), F.lit(n_buckets - 1))
 
 
-
 def psi_by_partition(df: DataFrame, partition_col: str, value_col: str,
                      n_buckets: int = 10,
-                     baseline: DataFrame | None = None,
-                     cache_registry: list | None = None,
-                     low_cardinality: bool = False) -> DataFrame:
+                     baseline: DataFrame | None = None) -> DataFrame:
     """Population Stability Index of ``value_col`` per partition vs baseline.
 
     Fixed-width buckets over the baseline's [min, max]; counts smoothed with
     ``PSI_SMOOTH`` so empty buckets don't blow up the log. Returns
-    ``(partition_id, psi)``. ``cache_registry`` collects persisted
-    intermediates for the caller to unpersist (see :func:`ks_by_partition`).
+    ``(partition_id, psi)``; nothing is persisted.
 
-    ``low_cardinality=True`` (self-baseline only): route through a
-    per-(partition, value) counts frame — ONE scan and one shuffle of
-    O(partitions × distinct values) state; the [min, max] bounds and the
-    baseline histogram both derive from the cached counts, so no second
-    bounds pass over the raw input. Identical math (values are bucketed
-    exactly as rows would be; counts sum). This is the right route for
-    structurally bounded columns — token length is capped by the context
-    size, so its distinct-value count is O(max_seq_len) at ANY corpus
-    scale — while unbounded continuous columns should keep the default
-    two-pass fixed-width path.
+    The check suite runs self- and pinned-baseline PSI in the fused builder
+    (checks/fused.py); ``run_checks`` calls this only with a raw
+    ``baseline`` frame. The self-baseline branch serves direct callers.
     """
-    if low_cardinality and baseline is None:
-        return _psi_low_cardinality(df, partition_col, value_col, n_buckets,
-                                    cache_registry)
     base = baseline if baseline is not None else df
     v = F.col(value_col).cast("double")
 
@@ -101,7 +89,7 @@ def psi_by_partition(df: DataFrame, partition_col: str, value_col: str,
     if baseline is None:
         # Self-baseline in ONE linear plan: the n_buckets bucket counts per
         # partition are conditional sums in a single map-side-combined
-        # groupBy (the pinned-psi idiom — the shuffle carries n_buckets
+        # groupBy (the fused suite's idiom — the shuffle carries n_buckets
         # longs per partition), and the baseline histogram + grand total
         # are WINDOW sums over that tiny aggregated frame (#partitions
         # rows). Two jobs total (bounds + this plan); no grid join, no
@@ -140,18 +128,10 @@ def psi_by_partition(df: DataFrame, partition_col: str, value_col: str,
     )
     base_total = base.agg(F.count(F.lit(1)).cast("double").alias("n_base"))
 
-    return _psi_finish(df.sparkSession, parts, part_counts, base_counts,
-                       base_total, n_buckets)
-
-
-def _psi_finish(spark, parts: DataFrame, part_counts: DataFrame,
-                base_counts: DataFrame, base_total: DataFrame,
-                n_buckets: int) -> DataFrame:
-    """Shared PSI tail: full (partition × bucket) grid (so zero-count buckets
-    still get smoothing), smoothed p/q, Σ (p−q)·ln(p/q)."""
-    grid = parts.crossJoin(
-        spark.range(n_buckets).select(F.col("id").alias("bucket")))
-
+    # full (partition × bucket) grid, so zero-count buckets still get
+    # smoothing; then smoothed p/q and Σ (p−q)·ln(p/q)
+    grid = parts.crossJoin(df.sparkSession.range(n_buckets)
+                           .select(F.col("id").alias("bucket")))
     joined = (
         _pid_nullsafe_join(grid, part_counts, "bucket")
             .join(F.broadcast(base_counts), ["bucket"], "left")
@@ -171,41 +151,6 @@ def _psi_finish(spark, parts: DataFrame, part_counts: DataFrame,
               .groupBy("partition_id")
               .agg(F.sum("term").alias("psi"))
     )
-
-
-def _psi_low_cardinality(df: DataFrame, partition_col: str, value_col: str,
-                         n_buckets: int,
-                         cache_registry: list | None) -> DataFrame:
-    """Self-baseline PSI via per-(partition, value) counts — see
-    :func:`psi_by_partition` (``low_cardinality=True``).
-
-    The raw input is scanned exactly once (the counts shuffle); bounds,
-    the per-partition histograms AND the baseline histogram all derive
-    from the cached counts frame, whose size is O(partitions × distinct
-    values) regardless of row count. Bucketing values then summing their
-    counts is algebraically identical to bucketing rows.
-    """
-    v = F.col(value_col).cast("double").alias("v")
-    pvc = (
-        df.select(F.col(partition_col).alias("partition_id"), v)
-          .groupBy("partition_id", "v").agg(F.count(F.lit(1)).alias("c_p"))
-          .persist()
-    )
-    if cache_registry is not None:
-        cache_registry.append(pvc)
-
-    row = pvc.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).first()
-    lo, hi = row["lo"], row["hi"]
-    bucketed = pvc.withColumn(
-        "bucket", _bucket_expr(F.col("v"), lo, hi, n_buckets))
-
-    part_counts = bucketed.groupBy("partition_id", "bucket") \
-                          .agg(F.sum("c_p").alias("c_p"))
-    parts = pvc.select("partition_id").distinct()
-    base_counts = bucketed.groupBy("bucket").agg(F.sum("c_p").alias("c_b"))
-    base_total = pvc.agg(F.sum("c_p").cast("double").alias("n_base"))
-    return _psi_finish(df.sparkSession, parts, part_counts, base_counts,
-                       base_total, n_buckets)
 
 
 def _ks_grid_tail(joined: DataFrame) -> DataFrame:
@@ -273,9 +218,8 @@ def ks_by_partition(df: DataFrame, partition_col: str, value_col: str,
     ``bounded=True`` skips the guard (and its blocking distinct-count job)
     entirely — the opt-in for *structurally* bounded columns, where the
     distinct-value count is capped by construction at any corpus scale
-    (token length ≤ context size — the same argument as
-    :func:`psi_by_partition`'s ``low_cardinality``). Unbounded or unknown
-    columns must keep the guard. With no explicit baseline this routes to
+    (token length ≤ context size). Unbounded or unknown columns must keep
+    the guard. With no explicit baseline this routes to
     :func:`_ks_bounded_self` — a fully-lazy single linear plan (no persist,
     no grid self-join, no blocking job at all).
 
@@ -461,33 +405,6 @@ def _ks_bounded_self(df: DataFrame, partition_col: str, value_col: str,
     if include_rows:
         aggs.append(F.sum("c_p").alias("rows_scanned"))
     return scored.groupBy("partition_id").agg(*aggs)
-
-
-def psi_by_partition_pinned(df: DataFrame, partition_col: str, value_col: str,
-                            lo: float, hi: float, base_counts: list[float],
-                            n_base: float) -> DataFrame:
-    """PSI against a *pinned* histogram baseline (checkpoint/resume path).
-
-    ``base_counts[b]`` are the baseline bucket counts over [lo, hi] fixed-width
-    buckets; the partition histogram is computed in one conditional-sum
-    groupBy (no second scan, no baseline scan at all). Identical math to
-    :func:`psi_by_partition` when the pinned values came from the same data.
-    """
-    nb = len(base_counts)
-    v = F.col(value_col).cast("double")
-    bucket = _bucket_expr(v, lo, hi, nb)
-    aggs = [F.sum(F.when(bucket == b, 1).otherwise(0)).alias(f"b{b}")
-            for b in range(nb)]
-    part = df.groupBy(F.col(partition_col).alias("partition_id")).agg(*aggs)
-
-    n_p = sum((F.col(f"b{b}") for b in range(1, nb)), F.col("b0"))
-    terms = []
-    for b in range(nb):
-        p = (F.col(f"b{b}") + F.lit(PSI_SMOOTH)) / (n_p + F.lit(PSI_SMOOTH * nb))
-        q = F.lit((base_counts[b] + PSI_SMOOTH) / (n_base + PSI_SMOOTH * nb))
-        terms.append((p - q) * F.log(p / q))
-    psi = sum(terms[1:], terms[0])
-    return part.select("partition_id", psi.alias("psi"))
 
 
 def ks_by_partition_counts(df: DataFrame, partition_col: str, value_col: str,

@@ -44,20 +44,25 @@ The pyspark Column DSL costs a socket round trip per operator application
 (plus ~4 more each with call-site capture on, which session.py disables);
 a fused suite plan is a several-thousand-node expression tree, and building
 it node-by-node measured 0.65–1.5 s of pure driver latency — string
-construction is O(1) round trips per frame and parses JVM-side. The
-generated trees are operator-for-operator identical to the old Column
-version (same operand order, same literal values — float literals embedded
-via ``repr`` round-trip exactly), pinned by tests/test_fused.py's
-bit-identity against the per-check path.
+construction is O(1) round trips per frame and parses JVM-side. Float
+literals are embedded via a ``repr`` round-trip (exact), user identifiers
+are backtick-escaped and string literals quote-escaped; tests/test_fused.py
+pins that hostile check ids, column names and literals change no verdict.
+
+This builder is the ONLY executor of the fusible kinds — a one-check suite
+is a fused plan of one — so each kind has exactly one definition, here, with
+its semantic rules beside it. Their semantics are pinned against an
+independent DuckDB re-derivation (tests/test_fuzz_oracle.py on hostile
+random and degenerate tables, tools/verify_contract.py on the fixtures), not
+against a second Spark implementation. Integer aggregates are exact; float
+aggregates depend only on summation order (within the 6-decimal rounding
+every consumer applies).
 
 Non-fusible kinds (``unique`` needs a groupBy on the key, ``drift_ks`` needs
-the per-value CDF grid, ``token_invariant`` needs a snapshot join) keep their
-own plans — those shuffles are inherent to their semantics.
-
-Results are bit-identical to the per-check path (asserted in
-tests/test_fused.py); integer aggregates are exact, float aggregates differ
-only in summation order (within the 6-decimal rounding every consumer
-applies).
+the per-value CDF grid, ``token_invariant`` needs a snapshot join,
+``drift_psi`` against a raw ``baseline`` frame buckets over that frame's own
+range) keep their own plans in checks/core.py — those shuffles are inherent
+to their semantics.
 
 Reference lineage: this is the Spark answer to the reference recomputing its
 stats per detection stage (/root/reference/data_processing/detector.py:149-230
@@ -68,7 +73,7 @@ from __future__ import annotations
 
 import hashlib
 import re
-from typing import Iterable, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -77,18 +82,13 @@ from pyanomalydetector_spark.checks.drift import PSI_SMOOTH
 
 
 def is_fusible(check) -> bool:
-    """Checks with DataFrame-valued params use the per-check path; plain
-    config (including pinned-baseline scalars) fuses."""
-    k, p = check.kind, check.params
-    if k in ("column_stats", "n_tok_consistency", "token_range"):
-        return True
-    if k == "zscore_threshold":
-        return p.get("baseline") is None
-    if k == "referential":
-        return isinstance(p.get("allowed"), (list, tuple, set))
-    if k == "drift_psi":
-        return p.get("baseline") is None
-    return False
+    """The kinds this builder executes. The one non-fusible form of a
+    fusible kind is ``drift_psi`` against a raw ``baseline`` frame
+    (drift.py:psi_by_partition)."""
+    if check.kind == "drift_psi":
+        return check.params.get("baseline") is None
+    return check.kind in ("column_stats", "zscore_threshold", "referential",
+                          "n_tok_consistency", "token_range")
 
 
 # ------------------------------------------------- SQL-string construction ----
@@ -180,14 +180,40 @@ def _token_range_elem_pred(lo: int, hi: int) -> str:
 
 def _token_range_bad(p: dict) -> str:
     """Row-level predicate SQL for ``token_range`` — the ONE definition the
-    aggregate and the violations scan both embed (operator-for-operator the
-    tree _check_token_range builds: NULL array → FALSE; the element
-    predicate absorbs NULL elements, so EXISTS is never NULL)."""
+    aggregate and the violations scan both embed.
+
+    The check is the tokenized-corpus analog of the reference's hard
+    threshold predicate (detect1's absolute limits, detector.py:211): a
+    token id outside the tokenizer's vocabulary, or a NULL element, proves
+    upstream corruption regardless of any distribution. Semantics:
+
+    - a NULL tokens ARRAY passes — array presence/length is
+      ``n_tok_consistency``'s contract, not range's;
+    - a NULL ELEMENT violates (no real tokenizer emits NULL); the element
+      predicate absorbs it, so EXISTS is never NULL;
+    - violation rows carry the FIRST offending element (``'NULL'`` for a
+      NULL element) and the bound as ``expected``.
+    """
     col = p.get("value_col", "tokens")
     lo, hi = int(p.get("min_value", 0)), int(p["max_value"])
     return (f"(CASE WHEN {_bt(col)} IS NULL THEN FALSE ELSE "
             f"EXISTS({_bt(col)}, t -> "
             f"{_token_range_elem_pred(lo, hi)}) END)")
+
+
+# Metadata invariant n_tok == size(tokens), NULL-SAFE: plain ``!=`` is NULL
+# when either side is NULL (``SIZE(NULL)`` is NULL in non-legacy Spark), so a
+# row with NULL metadata but non-NULL tokens — or vice versa — would
+# silently PASS. ``<=>`` makes the contradiction count; NULL on BOTH sides
+# (no declared count, no tokens) is consistent and passes.
+_NTOK_BAD = "(NOT (n_tok <=> SIZE(tokens)))"
+
+
+def _in_allowed(p: dict) -> str:
+    """``referential`` membership test. A NULL value makes IN(...) NULL,
+    which every consumer routes to the ELSE (violation) branch."""
+    col, allowed = p.get("column", "source"), sorted(p["allowed"])
+    return f"({_bt(col)} IN ({', '.join(_lit(a) for a in allowed)}))"
 
 
 def _moment_aggs(vc: str, tag: str) -> list[str]:
@@ -274,16 +300,13 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
                 moment_tags.add(mtag)
                 aggs += _moment_aggs(vc, mtag)
         elif c.kind == "n_tok_consistency":
-            aggs.append("SUM(CASE WHEN (NOT (n_tok <=> SIZE(tokens))) THEN 1 "
+            aggs.append(f"SUM(CASE WHEN {_NTOK_BAD} THEN 1 "
                         f"ELSE 0 END) AS {tag}_bad")
         elif c.kind == "token_range":
             aggs.append(f"SUM(CASE WHEN {_token_range_bad(p)} THEN 1 "
                         f"ELSE 0 END) AS {tag}_bad")
         elif c.kind == "referential":
-            col, allowed = p.get("column", "source"), sorted(p["allowed"])
-            in_list = ", ".join(_lit(a) for a in allowed)
-            # NULL→bad: CASE WHEN col IN (...) THEN 0 ELSE 1 (NULL falls to 1)
-            aggs.append(f"SUM(CASE WHEN ({_bt(col)} IN ({in_list})) THEN 0 "
+            aggs.append(f"SUM(CASE WHEN {_in_allowed(p)} THEN 0 "
                         f"ELSE 1 END) AS {tag}_bad")
         elif c.kind == "drift_psi":
             vc = p.get("value_col", "n_tok")
@@ -318,7 +341,8 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
 
     # ---- global baselines: lazy 1-row re-agg of the tiny frame -------------
     need_globals = any(
-        (c.kind == "zscore_threshold" and c.params.get("baseline_scalars") is None)
+        (c.kind == "zscore_threshold" and c.params.get("baseline_scalars") is None
+         and c.params.get("baseline") is None)
         or (c.kind == "drift_psi" and c.params.get("pinned_hist") is None)
         for c in checks)
     pa = part_aggs
@@ -363,30 +387,44 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
             vc = p.get("value_col", "n_tok")
             min_count = int(p.get("min_count", 1))
             cnt = f"m_{ctag[vc]}_cnt"
-            # cnt==0 (an all-NULL-value partition) emits NO verdict row,
-            # matching the per-check path (finalize_mean_std drops cnt==0)
+            # cnt==0 (an all-NULL-value partition) emits NO verdict row:
+            # there is nothing to count (finalize_mean_std drops cnt==0)
             verdicts.append(verdict_select(
                 pa.filter(f"{cnt} > 0"), c.check_id,
                 passed=f"({cnt} >= {min_count})",
                 observed=cnt, expected=_d(min_count), threshold=_d(min_count),
                 n_violations="0", rows_scanned=cnt))
         elif c.kind == "zscore_threshold":
+            # detect1 (detector.py:211): the partition mean deviates from the
+            # baseline mean by more than λ·σ, guarded by the relative-diff
+            # filter of detector.py:218. The reference has an operator-
+            # precedence bug there: ``mean_t > 0 & (...)`` binds as
+            # ``mean_t > (0 & (...))``; this implements the INTENDED
+            # ``mean_t > 0 AND reldiff > rate`` (pinned by
+            # tests/test_checks.py and the DuckDB oracle). TRY_DIVIDE keeps
+            # it ANSI-safe at mean_t == 0 (NULL → not failing). Row-level
+            # violations replicate _filter_anomalies (detector.py:382-404):
+            # within failing partitions, rows outside baseline mean ± λ·σ.
             vc = p.get("value_col", "n_tok")
             lam = float(p.get("lambda", 2.0))
             rate = float(p.get("ignore_diff_rate", 0.0))
             mtag = f"m_{ctag[vc]}"
-            scalars = p.get("baseline_scalars")
+            # cnt==0 partitions emit no verdict: they have no mean
+            pa_z = pa.filter(f"{mtag}_cnt > 0")
+            scalars, base = p.get("baseline_scalars"), p.get("baseline")
             if scalars is not None:          # pinned baseline (resume path)
                 mean_t, std_t = _d(scalars["mean"]), _d(scalars["std"])
+            elif base is not None:           # user frame of (mean, std) rows
+                mean_t, std_t = f"_zbm_{i}", f"_zbs_{i}"
+                pa_z = pa_z.crossJoin(F.broadcast(base.selectExpr(
+                    f"CAST(mean AS DOUBLE) AS {mean_t}",
+                    f"CAST(std AS DOUBLE) AS {std_t}")))
             else:
                 mean_t, std_t = _global_mean_std(mtag)
             mean_h, _ = _finalized(mtag)
             dev = f"ABS(({mean_h}) - ({mean_t}))"
             fail = (f"((({dev}) > {_d(lam)} * ({std_t})) AND (({mean_t}) > 0) "
                     f"AND (TRY_DIVIDE({dev}, {mean_t}) > {_d(rate)}))")
-            # cnt==0 partitions emit no verdict, matching the per-check
-            # path (finalize_mean_std filters cnt>0 before the crossJoin)
-            pa_z = pa.filter(f"{mtag}_cnt > 0")
             verdicts.append(verdict_select(
                 pa_z, c.check_id,
                 passed=f"(NOT {fail})",
@@ -414,7 +452,7 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
                 observed=bad_n, expected=_d(0.0), threshold=_d(0.0),
                 n_violations=bad_n, rows_scanned="_rows"))
             viol_entries.append((
-                c.check_id, "(NOT (n_tok <=> SIZE(tokens)))",
+                c.check_id, _NTOK_BAD,
                 "CAST(n_tok AS STRING)", "CAST(SIZE(tokens) AS STRING)"))
         elif c.kind == "token_range":
             col = p.get("value_col", "tokens")
@@ -434,19 +472,16 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
             viol_entries.append((c.check_id, bad, obs,
                                  _sq(f"token id in [{lo}, {hi})")))
         elif c.kind == "referential":
-            col, allowed = p.get("column", "source"), sorted(p["allowed"])
-            in_list = ", ".join(_lit(a) for a in allowed)
             bad_n = f"{tag}_bad"
             verdicts.append(verdict_select(
                 pa, c.check_id,
                 passed=f"({bad_n} = 0)",
                 observed=bad_n, expected=_d(0.0), threshold=_d(0.0),
                 n_violations=bad_n, rows_scanned="_rows"))
+            col = p.get("column", "source")
             viol_entries.append((
                 c.check_id,
-                # NULL→violation, like the aggregate: IN(...)=NULL falls ELSE
-                f"(CASE WHEN ({_bt(col)} IN ({in_list})) THEN FALSE "
-                f"ELSE TRUE END)",
+                f"(CASE WHEN {_in_allowed(p)} THEN FALSE ELSE TRUE END)",
                 f"CAST({_bt(col)} AS STRING)",
                 _sq("member of allowed source set")))
         elif c.kind == "drift_psi":
@@ -505,10 +540,3 @@ def run_fused(df: DataFrame, checks: Sequence, pcol: str):
             ))
 
     return verdicts, violations, [part_aggs]
-
-
-def split_fusible(checks: Iterable) -> tuple[list, list]:
-    fused, rest = [], []
-    for c in checks:
-        (fused if is_fusible(c) else rest).append(c)
-    return fused, rest

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyanomalydetector_spark.checks.core import (
     Check, CheckResult, run_checks, VERDICT_SCHEMA, VIOLATION_SCHEMA,
 )
+from pyanomalydetector_spark.checks.drift import _bucket_expr
 from pyanomalydetector_spark.functions.stats import (
     sufficient_stats, finalize_mean_std,
 )
@@ -355,11 +356,7 @@ def compute_baseline(df: DataFrame, checks: list[Check]) -> tuple[PinnedBaseline
             if b["lo"] is None:   # empty input / all-NULL column
                 continue
             lo, hi = float(b["lo"]), float(b["hi"])
-            if hi == lo:
-                bucket = F.lit(0)
-            else:
-                raw = F.floor((v - F.lit(lo)) / F.lit((hi - lo) / nb))
-                bucket = F.least(F.greatest(raw, F.lit(0)), F.lit(nb - 1))
+            bucket = _bucket_expr(v, lo, hi, nb)
             counts = {r["b"]: r["c"] for r in
                       df.groupBy(bucket.alias("b"))
                         .agg(F.count(F.lit(1)).alias("c")).collect()}

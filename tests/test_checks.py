@@ -53,6 +53,15 @@ def test_referential_check(spark, seq, doc_ids):
     assert {r["partition_id"] for r in bad_verdict} == ({BAD_SOURCE} if expected else set())
 
 
+def test_referential_rejects_dataframe_allowed(spark, seq):
+    """The allowed set is a list of values; a DataFrame-valued one is
+    refused up front instead of silently taking some other route."""
+    dim = spark.createDataFrame([("src0",)], "source string")
+    with pytest.raises(ValueError, match="list of values"):
+        run_checks(seq, [Check("ref", "referential",
+                               {"column": "source", "allowed": dim})])
+
+
 def test_ntok_consistency_check(spark, seq, doc_ids):
     res = run_checks(seq, [Check("ntok", "n_tok_consistency", {})])
     viols = {r["doc_id"] for r in res.violations.collect()}
@@ -126,22 +135,6 @@ def test_jsonl_source_equals_parquet_source(spark, sf_dir):
     b = sorted((r["doc_id"], tuple(r["tokens"]), r["n_tok"], r["source"])
                for r in load_sequences_jsonl(spark, sf_dir).collect())
     assert a == b
-
-
-def test_psi_low_cardinality_route_equals_two_pass(spark, seq):
-    """The one-scan value-counts PSI route (for structurally bounded columns
-    like token length) must produce the same statistic as the default
-    two-pass fixed-width path — bucketing values then summing their counts
-    is algebraically identical to bucketing rows."""
-    from pyanomalydetector_spark.checks.drift import psi_by_partition
-    a = {r["partition_id"]: r["psi"]
-         for r in psi_by_partition(seq, "source", "n_tok").collect()}
-    b = {r["partition_id"]: r["psi"]
-         for r in psi_by_partition(seq, "source", "n_tok",
-                                   low_cardinality=True).collect()}
-    assert a.keys() == b.keys()
-    for k in a:
-        assert a[k] == pytest.approx(b[k], abs=1e-12), k
 
 
 def test_ks_cardinality_guard_bins_continuous_columns(spark, seq):
@@ -341,8 +334,7 @@ def _null_partition_fixture(spark):
 
 def test_null_partition_scored_not_dropped(spark):
     """Every check must emit a verdict row for the NULL partition with
-    correct counts, and attribute its row-level violations to it — and the
-    fused path must agree with the per-check path on that fixture."""
+    correct counts, and attribute its row-level violations to it."""
     df = _null_partition_fixture(spark)
     suite = [
         Check("uniq", "unique", {"key": "doc_id"}),
@@ -367,11 +359,9 @@ def test_null_partition_scored_not_dropped(spark):
                     for r in res.violations.collect()), key=_key)
         return v, w
 
-    fused = snap(run_checks(df, suite, fuse=True))
-    percheck = snap(run_checks(df, suite, fuse=False))
-    assert fused == percheck
+    verdict_rows, viols = snap(run_checks(df, suite))
 
-    verdicts = {(r[0], r[1]): r for r in fused[0]}
+    verdicts = {(r[0], r[1]): r for r in verdict_rows}
     # a verdict row exists for the NULL partition under every check
     for cid in ("uniq", "ref", "ntok", "z", "psi", "ks"):
         assert (None, cid) in verdicts, cid
@@ -386,7 +376,6 @@ def test_null_partition_scored_not_dropped(spark):
     assert math.isfinite(verdicts[(None, "ks")][3])
     assert verdicts[(None, "ks")][5] == 4      # rows_scanned incl. NULL pid
     # row-level violations attribute to the NULL partition
-    viols = fused[1]
     assert (None, "uniq", "n1") in viols
     assert (None, "ntok", "n2") in viols
     assert {d for p, c, d in viols if c == "ref" and p is None} == \
@@ -542,52 +531,11 @@ def test_token_invariant_conflicting_snapshot_duplicates_canonical(spark):
     assert res2.violations.count() == 1
 
 
-def test_unique_digest_prefilter_equals_direct(spark, seq):
-    """The opt-in digest-prefilter unique route must produce EXACTLY the
-    direct aggregation's outputs — verdicts (n_keys/n_dup_keys/
-    rows_scanned all exact despite the 8-byte digest shuffle) and the
-    capped duplicate lists — on the fixture with injected dups and on a
-    NULL-partition/NULL-key frame."""
-    direct = run_checks(seq, [Check("u", "unique", {"key": "doc_id"})])
-    digest = run_checks(seq, [Check("u", "unique",
-                                    {"key": "doc_id",
-                                     "digest_prefilter": True})])
-    as_set = lambda df: {tuple(r) for r in df.collect()}
-    assert as_set(digest.verdicts) == as_set(direct.verdicts)
-    assert as_set(digest.violations) == as_set(direct.violations)
-
-    # NULL partition and NULL key rows must group/attach identically
-    rows = [("k1", [1], 1, None), ("k1", [1], 1, None),
-            (None, [1], 1, None), (None, [1], 1, None),
-            ("k2", [1], 1, "s0"), ("k2", [1], 1, "s0"), ("k3", [1], 1, "s0")]
-    df = spark.createDataFrame(rows, _SCHEMA)
-    d1 = run_checks(df, [Check("u", "unique", {"key": "doc_id"})])
-    d2 = run_checks(df, [Check("u", "unique", {"key": "doc_id",
-                                               "digest_prefilter": True})])
-    assert as_set(d2.verdicts) == as_set(d1.verdicts)
-    assert as_set(d2.violations) == as_set(d1.violations)
-
-    # scalar internals too (n_keys is not surfaced by the verdict):
-    from pyanomalydetector_spark.checks.core import (
-        _unique_per_part, _unique_per_part_digest)
-    a = _unique_per_part(df, "doc_id", "source") \
-        .select("partition_id", "n_keys", "n_dup_keys", "rows_scanned")
-    b = _unique_per_part_digest(df, "doc_id", "source") \
-        .select("partition_id", "n_keys", "n_dup_keys", "rows_scanned")
-    assert as_set(a) == as_set(b)
-
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        run_checks(df, [Check("u", "unique",
-                              {"key": "doc_id", "digest_prefilter": True,
-                               "salt_buckets": 4})])
-
-
 def test_ntok_consistency_null_metadata_is_a_violation(spark):
     """NULL-safety of the metadata invariant: a row where one side is NULL
     and the other isn't CONTRADICTS n_tok == size(tokens) and must count
     (pre-fix, `!=` evaluated to NULL and the row silently PASSED). NULL on
-    both sides is consistent. Pinned on both execution paths — the fused
-    twin shares the predicate."""
+    both sides is consistent."""
     df = spark.createDataFrame(
         [("a", [1, 2], 2, "s1"),       # consistent
          ("b", [1, 2], None, "s1"),    # NULL declared count → violation
@@ -595,19 +543,13 @@ def test_ntok_consistency_null_metadata_is_a_violation(spark):
          ("d", None, None, "s1"),      # both absent → consistent
          ("e", [1], 9, "s2")],         # plain mismatch → violation
         "doc_id string, tokens array<int>, n_tok int, source string")
-    for fuse in (False, True):
-        checks = [Check("ntok", "n_tok_consistency", {})]
-        if fuse:   # fusion needs a second fusible check to engage
-            checks.append(Check("stats", "column_stats", {"value_col": "n_tok"}))
-        res = run_checks(df, checks, fuse=fuse)
-        viols = {r["doc_id"] for r in res.violations.collect()
-                 if r["check_id"] == "ntok"}
-        assert viols == {"b", "c", "e"}, f"fuse={fuse}: {viols}"
-        verd = {r["partition_id"]: r for r in res.verdicts.collect()
-                if r["check_id"] == "ntok"}
-        assert verd["s1"]["n_violations"] == 2 and not verd["s1"]["passed"]
-        assert verd["s2"]["n_violations"] == 1 and not verd["s2"]["passed"]
-        res.unpersist()
+    res = run_checks(df, [Check("ntok", "n_tok_consistency", {})])
+    viols = {r["doc_id"] for r in res.violations.collect()}
+    assert viols == {"b", "c", "e"}, viols
+    verd = {r["partition_id"]: r for r in res.verdicts.collect()}
+    assert verd["s1"]["n_violations"] == 2 and not verd["s1"]["passed"]
+    assert verd["s2"]["n_violations"] == 1 and not verd["s2"]["passed"]
+    res.unpersist()
 
 
 def test_salted_unique_is_key_generic(spark):
@@ -632,8 +574,7 @@ def test_salted_unique_is_key_generic(spark):
 def test_token_range_semantics_both_routes(spark):
     """token_range: NULL array passes, NULL element violates, out-of-range
     (either side) violates; the violation row carries the FIRST offending
-    element ('NULL' for a NULL element). Pinned identically on the
-    per-check and the fused route."""
+    element ('NULL' for a NULL element)."""
     df = spark.createDataFrame(
         [("a", [1, 2, 3], 3, "s1"),      # in range → pass
          ("b", [1, None, 3], 3, "s1"),   # NULL element → violation ('NULL')
@@ -642,23 +583,17 @@ def test_token_range_semantics_both_routes(spark):
          ("e", [], 0, "s2"),             # empty array → pass
          ("f", [-5, 900], 2, None)],     # NULL partition; first bad is -5
         "doc_id string, tokens array<int>, n_tok int, source string")
-    for fuse in (False, True):
-        checks = [Check("tr", "token_range", {"max_value": 800})]
-        if fuse:   # fusion needs a second fusible check to engage
-            checks.append(Check("stats", "column_stats", {"value_col": "n_tok"}))
-        res = run_checks(df, checks, fuse=fuse)
-        viols = {(r["doc_id"], r["observed"], r["expected"])
-                 for r in res.violations.collect() if r["check_id"] == "tr"}
-        assert viols == {("b", "NULL", "token id in [0, 800)"),
-                         ("c", "900", "token id in [0, 800)"),
-                         ("f", "-5", "token id in [0, 800)")}, \
-            f"fuse={fuse}: {viols}"
-        verd = {r["partition_id"]: r for r in res.verdicts.collect()
-                if r["check_id"] == "tr"}
-        assert verd["s1"]["n_violations"] == 1 and not verd["s1"]["passed"]
-        assert verd["s2"]["n_violations"] == 1 and verd["s2"]["rows_scanned"] == 3
-        assert verd[None]["n_violations"] == 1      # NULL partition kept
-        res.unpersist()
+    res = run_checks(df, [Check("tr", "token_range", {"max_value": 800})])
+    viols = {(r["doc_id"], r["observed"], r["expected"])
+             for r in res.violations.collect()}
+    assert viols == {("b", "NULL", "token id in [0, 800)"),
+                     ("c", "900", "token id in [0, 800)"),
+                     ("f", "-5", "token id in [0, 800)")}, viols
+    verd = {r["partition_id"]: r for r in res.verdicts.collect()}
+    assert verd["s1"]["n_violations"] == 1 and not verd["s1"]["passed"]
+    assert verd["s2"]["n_violations"] == 1 and verd["s2"]["rows_scanned"] == 3
+    assert verd[None]["n_violations"] == 1      # NULL partition kept
+    res.unpersist()
 
 
 def test_token_range_min_bound_and_all_pass(spark):

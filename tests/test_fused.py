@@ -1,10 +1,19 @@
-"""Fused check execution ≡ per-check execution (checks/fused.py contract)."""
+"""The fused builder (checks/fused.py) on hostile inputs: SQL-string
+injection, hostile column names, constructed tag collisions.
 
+The builder is the only executor of the fusible kinds, so the ground truth
+here is a RENAME check: the same suite with plain check ids and plain
+column names, over the frame with its columns renamed back, must yield the
+same verdicts and violations once the check ids are mapped back. Check
+semantics themselves are pinned against DuckDB (tests/test_fuzz_oracle.py).
+"""
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from pyanomalydetector_spark.sources.sequences import load_sequences
-from pyanomalydetector_spark.checks.core import Check, run_checks, default_suite
+from pyanomalydetector_spark.checks.core import Check, run_checks
 
 
 @pytest.fixture(scope="module")
@@ -31,24 +40,69 @@ def _norm_violations(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_fused_equals_per_check(seq):
-    suite = default_suite(_allowed(seq))
-    fused = run_checks(seq, suite, fuse=True)
-    plain = run_checks(seq, suite, fuse=False)
-    assert _norm_verdicts(fused.verdicts) == _norm_verdicts(plain.verdicts)
-    assert _norm_violations(fused.violations) == _norm_violations(plain.violations)
+def _run_rename_checked(df, suite, names):
+    """Run ``suite`` over ``df`` and assert it agrees with its plain twin:
+    check ids ``c0, c1, ...`` and every hostile name (column names, allowed
+    members) replaced via ``names``, over ``df`` with its columns renamed
+    the same way. Returns the hostile run's result."""
+    def plain(v):
+        if isinstance(v, list):
+            return [plain(x) for x in v]
+        return names.get(v, v) if isinstance(v, str) else v
+
+    plain_suite = [Check(f"c{i}", c.kind,
+                         {k: plain(v) for k, v in c.params.items()})
+                   for i, c in enumerate(suite)]
+    ids = {f"c{i}": c.check_id for i, c in enumerate(suite)}
+    plain_df = df
+    for col in df.columns:
+        if col in names:
+            plain_df = plain_df.withColumnRenamed(col, names[col])
+
+    def unmap(rows):
+        return sorted((r[0], ids[r[1]], *r[2:]) for r in rows)
+
+    res = run_checks(df, suite)
+    twin = run_checks(plain_df, plain_suite)
+    try:
+        assert _norm_verdicts(res.verdicts) == \
+            unmap(_norm_verdicts(twin.verdicts))
+        assert _norm_violations(res.violations) == \
+            unmap(_norm_violations(twin.violations))
+    finally:
+        twin.unpersist()
+    return res
 
 
 def test_fused_zscore_failing_partition_emits_row_violations(seq):
-    # force a failure: tiny lambda so every partition's mean deviates
+    """λ = 0.01 makes every partition whose mean differs from the global
+    one fail; its rows outside mean ± λ·σ are the violations. Expected set
+    recomputed with numpy (Bessel std over the non-NULL values)."""
+    lam = 0.01
     suite = [Check("z", "zscore_threshold",
-                   {"value_col": "n_tok", "lambda": 0.01,
-                    "ignore_diff_rate": 0.0}),
-             Check("stats", "column_stats", {"value_col": "n_tok"})]
-    fused = run_checks(seq, suite, fuse=True)
-    plain = run_checks(seq, suite, fuse=False)
-    assert _norm_violations(fused.violations) == _norm_violations(plain.violations)
-    assert fused.violations.count() > 0
+                   {"value_col": "n_tok", "lambda": lam,
+                    "ignore_diff_rate": 0.0})]
+    rows = [(r["source"], r["doc_id"], r["n_tok"])
+            for r in seq.select("source", "doc_id", "n_tok").collect()]
+    vals = np.array([v for _, _, v in rows if v is not None], dtype=float)
+    m, s = vals.mean(), vals.std(ddof=1)
+    failing = set()
+    for src in {p for p, _, _ in rows}:
+        mh = np.mean([v for p, _, v in rows if p == src and v is not None])
+        if abs(mh - m) > lam * s and m > 0 and abs(mh - m) / m > 0.0:
+            failing.add(src)
+    want = sorted((p, d) for p, d, v in rows
+                  if p in failing and v is not None and abs(v - m) > lam * s)
+
+    res = run_checks(seq, suite)
+    try:
+        got = sorted((r["partition_id"], r["doc_id"])
+                     for r in res.violations.collect())
+        assert failing and got == want
+        verd = {r["partition_id"]: r["passed"] for r in res.verdicts.collect()}
+        assert {p for p, ok in verd.items() if not ok} == failing
+    finally:
+        res.unpersist()
 
 
 def test_unique_salted_equals_direct(seq):
@@ -60,32 +114,11 @@ def test_unique_salted_equals_direct(seq):
     assert _norm_violations(direct.violations) == _norm_violations(salted.violations)
 
 
-def test_fused_eq_per_check_all_null_value_partition(spark):
-    """A partition whose value column is entirely NULL gets NO column_stats/
-    zscore verdict row on the per-check path (finalize_mean_std drops
-    cnt==0); the fused path must agree instead of emitting a scrubbed-to-0
-    row."""
-    df = spark.createDataFrame(
-        [("a", [1], 1, "s1"), ("b", [2], 2, "s1"),
-         ("c", [3], None, "s2"), ("d", [4], None, "s2")],
-        "doc_id string, tokens array<int>, n_tok int, source string")
-    suite = [Check("stats", "column_stats", {"value_col": "n_tok"}),
-             Check("z", "zscore_threshold",
-                   {"value_col": "n_tok", "lambda": 0.5,
-                    "ignore_diff_rate": 0.0})]
-    fused = run_checks(df, suite, fuse=True)
-    plain = run_checks(df, suite, fuse=False)
-    assert _norm_verdicts(fused.verdicts) == _norm_verdicts(plain.verdicts)
-    assert _norm_violations(fused.violations) == _norm_violations(plain.violations)
-    assert {r["partition_id"] for r in fused.verdicts.collect()} == {"s1"}
-
-
 def test_fused_sql_strings_survive_quoted_identifiers(seq):
-    """The fused builder emits SQL STRINGS (fused.py round-4 rewrite), so
-    quote-bearing check ids and allowed-set members are an injection
-    surface: a check_id like "o'brien", an allowed value with a quote, and
-    a float literal that must round-trip exactly. Per-check path (Column
-    DSL, no parsing) is the ground truth."""
+    """The fused builder emits SQL STRINGS, so quote-bearing check ids and
+    allowed-set members are an injection surface: a check_id like
+    "o'brien", an allowed value with a quote, and a float literal that must
+    round-trip exactly. None of it may change a verdict or violation."""
     allowed = _allowed(seq) + ["it's-a-source", "x''y"]
     suite = [
         Check("o'brien \"stats\"", "column_stats",
@@ -98,19 +131,17 @@ def test_fused_sql_strings_survive_quoted_identifiers(seq):
               {"value_col": "n_tok", "buckets": 7, "threshold": 0.25}),
         Check("n't", "n_tok_consistency", {}),
     ]
-    fused = run_checks(seq, suite, fuse=True)
-    plain = run_checks(seq, suite, fuse=False)
-    assert _norm_verdicts(fused.verdicts) == _norm_verdicts(plain.verdicts)
-    assert _norm_violations(fused.violations) == _norm_violations(plain.violations)
-    fused.unpersist(); plain.unpersist()
+    res = _run_rename_checked(seq, suite, {"it's-a-source": "extra_a",
+                                           "x''y": "extra_b"})
+    res.unpersist()
 
 
 def test_fused_hostile_value_col_names(seq):
-    """ADVICE r04: generated aliases used to embed the raw value_col name
+    """Generated aliases used to embed the raw value_col name
     (``m_{vc}_sum``, ``_lo_{vc}``) — a name with spaces/dashes failed to
-    parse even though the per-check Column-DSL path accepted it. Now tags
-    come from _ctag(); also pin that two names with the SAME word-character
-    skeleton ("v 1" vs "v-1" → both "v1") do not collide on one moment tag."""
+    parse. Now tags come from _ctag(); also pin that two names with the SAME
+    word-character skeleton ("v 1" vs "v-1" → both "v1") do not collide on
+    one moment tag."""
     df = (seq.withColumnRenamed("n_tok", "n tok ±")
              .withColumn("v 1", F.expr("`n tok ±` + 1"))
              .withColumn("v-1", F.expr("`n tok ±` * 2")))
@@ -129,15 +160,13 @@ def test_fused_hostile_value_col_names(seq):
         Check("z-v1b", "zscore_threshold",
               {"value_col": "v-1", "lambda": 0.5, "ignore_diff_rate": 0.0}),
     ]
-    fused = run_checks(df, suite, fuse=True)
-    plain = run_checks(df, suite, fuse=False)
-    assert _norm_verdicts(fused.verdicts) == _norm_verdicts(plain.verdicts)
-    assert _norm_violations(fused.violations) == _norm_violations(plain.violations)
+    res = _run_rename_checked(df, suite, {"n tok ±": "x0", "v 1": "x1",
+                                          "v-1": "x2"})
     # the two skeleton-colliding columns must have produced DIFFERENT stats
     obs = {r["check_id"]: r["observed"]
-           for r in fused.verdicts.collect() if r["check_id"].startswith("z-v1")}
+           for r in res.verdicts.collect() if r["check_id"].startswith("z-v1")}
     assert obs["z-v1a"] != obs["z-v1b"]
-    fused.unpersist(); plain.unpersist()
+    res.unpersist()
 
 
 def test_fused_constructed_tag_collision(seq):
@@ -146,7 +175,7 @@ def test_fused_constructed_tag_collision(seq):
     exact output for that column. Pre-_tag_map, both checks silently shared
     ONE set of moment aggregates (the second read the first's mean/std —
     wrong verdicts, no error). The per-suite injective map must keep them
-    apart; fused ≡ per-check stays the oracle."""
+    apart; plain column names (no tags to collide) are the ground truth."""
     import hashlib
     evil = "v1_" + hashlib.md5(b"v 1").hexdigest()[:8]   # == _ctag("v 1")
     df = (seq.withColumn("v 1", F.expr("n_tok + 1"))
@@ -159,33 +188,27 @@ def test_fused_constructed_tag_collision(seq):
         Check("z-ev", "zscore_threshold",
               {"value_col": evil, "lambda": 0.5, "ignore_diff_rate": 0.0}),
     ]
-    fused = run_checks(df, suite, fuse=True)
-    plain = run_checks(df, suite, fuse=False)
-    assert _norm_verdicts(fused.verdicts) == _norm_verdicts(plain.verdicts)
-    assert _norm_violations(fused.violations) == _norm_violations(plain.violations)
-    obs = {r["check_id"]: r["observed"] for r in fused.verdicts.collect()
+    res = _run_rename_checked(df, suite, {"v 1": "x1", evil: "x2"})
+    obs = {r["check_id"]: r["observed"] for r in res.verdicts.collect()
            if r["check_id"].startswith("z-")}
     assert obs["z-sp"] != obs["z-ev"]   # distinct columns, distinct stats
-    fused.unpersist(); plain.unpersist()
+    res.unpersist()
 
 
 def test_fused_backtick_column_name(spark):
     """A column literally named with a backtick must resolve to ITSELF:
     _bt escapes by doubling (VERDICT r04 nit — stripping rewrote a`b → ab,
-    silently reading the wrong column). Hand-checked expectations because
-    F.col() can't express a backtick name for the per-check ground truth."""
+    silently reading the wrong column)."""
     df = spark.createDataFrame(
         [("a", [1], 1, "s1", 10.0, 99.0), ("b", [2], 2, "s1", 20.0, 99.0),
          ("c", [3], 3, "s2", 30.0, 99.0), ("d", [4], 4, "s2", 40.0, 99.0)],
         "doc_id string, tokens array<int>, n_tok int, source string, "
         "`x``tick` double, ab double")
-    # two fusible checks so the fused builder engages (fusion needs >=2)
-    res = run_checks(df, [Check("bt", "column_stats",
-                                {"value_col": "x`tick", "min_count": 1}),
-                          Check("nt", "n_tok_consistency", {})],
-                     fuse=True)
-    rows = {r["partition_id"]: r for r in res.verdicts.collect()
-            if r["check_id"] == "bt"}
+    res = _run_rename_checked(
+        df, [Check("bt", "column_stats", {"value_col": "x`tick",
+                                          "min_count": 1})],
+        {"x`tick": "xtick"})
+    rows = {r["partition_id"]: r for r in res.verdicts.collect()}
     # the decoy column `ab` (what backtick-STRIPPING would resolve to) has
     # value 99.0 everywhere; x`tick has 2 non-null values per partition
     assert rows["s1"]["rows_scanned"] == 2 and rows["s2"]["rows_scanned"] == 2

@@ -1,12 +1,12 @@
-"""Adversarial randomized inputs: fused ≡ per-check on arbitrary tables.
+"""Adversarial randomized inputs for the check suite.
 
-test_fused.py pins the invariant on the curated fixtures; this module throws
-seeded-random garbage at the same contract — NULL doc_ids, NULL sources (a
-NULL partition_id), NULL/empty token arrays, n_tok that contradicts
-size(tokens), sources outside the allowed set, single-row partitions, and the
-empty table. Seeds are fixed so failures reproduce; the generator is numpy,
-not hypothesis, because every example costs a handful of Spark jobs and we
-want a small, deterministic corpus rather than shrinking.
+``_random_rows`` is the hostile corpus tests/test_fuzz_oracle.py checks
+against its DuckDB re-derivation — NULL doc_ids, NULL sources (a NULL
+partition_id), NULL/empty token arrays, n_tok that contradicts
+size(tokens), sources outside the allowed set, single-row partitions. Seeds
+are fixed so failures reproduce; the generator is numpy, not hypothesis,
+because every example costs a handful of Spark jobs and we want a small,
+deterministic corpus rather than shrinking.
 """
 
 import numpy as np
@@ -74,38 +74,20 @@ def _norm_violations(df):
 
 
 @pytest.mark.parametrize("seed", [7, 19, 1031])
-def test_fused_eq_per_check_on_random_tables(spark, seed):
+def test_suite_rerun_is_deterministic_on_random_tables(spark, seed):
     df = spark.createDataFrame(_random_rows(seed), SCHEMA)
-    # default suite + token_range (fusible): the bounds slice the
-    # generator's [0, 1000) id range on both ends, and the injected NULL /
+    # default suite + token_range: the bounds slice the generator's
+    # [0, 1000) id range on both ends, and the injected NULL /
     # out-of-window elements violate
     suite = default_suite(ALLOWED) + [
         Check("token_range_ids", "token_range",
               {"min_value": 50, "max_value": 800})]
-    fused = run_checks(df, suite, fuse=True)
-    plain = run_checks(df, suite, fuse=False)
+    first = run_checks(df, suite)
+    again = run_checks(df, suite)
     try:
-        assert _norm_verdicts(fused.verdicts) == _norm_verdicts(plain.verdicts)
-        assert _norm_violations(fused.violations) == \
-            _norm_violations(plain.violations)
-        # the run is also self-deterministic: a second fused pass agrees
-        again = run_checks(df, suite, fuse=True)
-        assert _norm_verdicts(again.verdicts) == _norm_verdicts(fused.verdicts)
+        assert _norm_verdicts(again.verdicts) == _norm_verdicts(first.verdicts)
+        assert _norm_violations(again.violations) == \
+            _norm_violations(first.violations)
+    finally:
+        first.unpersist()
         again.unpersist()
-    finally:
-        fused.unpersist()
-        plain.unpersist()
-
-
-def test_checks_on_empty_table(spark):
-    df = spark.createDataFrame([], SCHEMA)
-    suite = default_suite(ALLOWED)
-    fused = run_checks(df, suite, fuse=True)
-    plain = run_checks(df, suite, fuse=False)
-    try:
-        assert _norm_verdicts(fused.verdicts) == _norm_verdicts(plain.verdicts)
-        assert fused.violations.count() == 0
-        assert plain.violations.count() == 0
-    finally:
-        fused.unpersist()
-        plain.unpersist()

@@ -1,17 +1,19 @@
 """Cross-ENGINE fuzz: run_checks (Spark) vs an independent DuckDB oracle on
 hostile random tables.
 
-test_fuzz_checks.py pins fused ≡ per-check — an equivalence both paths can
-satisfy while SHARING a bug (the n_tok `!=` NULL hole lived identically on
-both paths and passed that fuzz for four rounds). This module re-derives
-every default-suite verdict and violation in DuckDB SQL straight from the
-documented semantics (checks/core.py, checks/drift.py), so a Spark-side bug
-must be independently re-invented in SQL to slip through. The driver's own
-oracle comparison (__spark_entry__.oracle_sql) only ever sees the well-formed
-sf fixtures; this runs the same cross-engine idea over the hostile corpus —
-NULL doc_ids / sources / tokens / n_tok, contradicting metadata, forced key
-collisions — plus targeted degenerate frames (all-NULL value column, single
-distinct value, single partition, empty).
+This is the check-semantics invariant. An equivalence between two Spark
+implementations can hold while both SHARE a bug (the n_tok `!=` NULL hole
+lived in a per-check twin and the fused builder alike, and passed their
+equivalence fuzz for four rounds). This module re-derives every
+default-suite verdict and violation in DuckDB SQL straight from the
+documented semantics (checks/fused.py, checks/core.py, checks/drift.py), so
+a Spark-side bug must be independently re-invented in SQL to slip through.
+The contract's own oracle comparison (__spark_entry__.oracle_sql) only ever
+sees the well-formed sf fixtures; this runs the same cross-engine idea over
+the hostile corpus — NULL doc_ids / sources / tokens / n_tok, contradicting
+metadata, forced key collisions — plus targeted degenerate frames (all-NULL
+value column, single distinct value, single partition, a zscore-failing
+outlier partition, empty).
 
 Modeled semantics (partition = source, value = n_tok, allowed = {s1, s2},
 λ = 2.0, ignore_diff_rate = 0.1, PSI 10 buckets/thr 0.25, KS thr 0.35):
@@ -238,6 +240,7 @@ def _blank_zscore_expected(rows, cols):
 
 
 def _compare(spark, rows, tmp_path, label, suite=None):
+    """Assert Spark ≡ DuckDB on ``rows``; return the canonical violations."""
     df = spark.createDataFrame(rows, SCHEMA)
     path = str(tmp_path / f"{label}.parquet")
     df.write.mode("overwrite").parquet(path)
@@ -276,6 +279,7 @@ def _compare(spark, rows, tmp_path, label, suite=None):
         f"{label}: violations diverge\n spark-only: "
         f"{[r for r in s_viol if r not in o_viol][:5]}\n oracle-only: "
         f"{[r for r in o_viol if r not in s_viol][:5]}")
+    return s_viol
 
 
 @pytest.mark.parametrize("seed", [7, 19, 1031, 40961])
@@ -300,26 +304,30 @@ DEGENERATE = {
     "null_island": [("a", [1, 2], 2, "s1"), ("b", [9], 1, "s1"),
                     ("c", None, None, "s3"), ("d", [4], None, "s3"),
                     ("e", [5, 6], 2, "s2")],
+    # one partition fails zscore under the DEFAULT params (λ = 2.0, rate
+    # 0.1): global mean 6, σ ≈ 10.2, and s2's mean 30 sits 24 > 2σ away,
+    # so both of its rows are zscore violations
+    "zscore_outlier": [(f"d{i}", [1, 2], 2, "s1") for i in range(12)]
+                      + [(f"o{i}", [7] * 30, 30, "s2") for i in range(2)],
 }
 
 
 @pytest.mark.parametrize("case", sorted(DEGENERATE))
 def test_suite_matches_duckdb_on_degenerate_tables(spark, tmp_path, case):
-    _compare(spark, DEGENERATE[case], tmp_path, case)
+    viol = _compare(spark, DEGENERATE[case], tmp_path, case)
+    if case == "zscore_outlier":
+        assert any("zscore_n_tok" in r for r in viol)
 
 
 def test_suite_matches_duckdb_on_empty_table(spark, tmp_path):
     _compare(spark, [], tmp_path, "empty")
 
 
-# Alternate execution routes must hit the SAME oracle: today they are only
-# pinned route ≡ route (salted ≡ unsalted, digest ≡ direct, low-cardinality
-# PSI ≡ two-pass, guarded KS grid ≡ bounded one-plan) — equivalences that,
-# like fused ≡ per-check, a shared semantic bug satisfies trivially.
+# Alternate execution routes must hit the SAME oracle, not just each other
+# (salted ≡ unsalted, guarded KS grid ≡ bounded one-plan) — a route ≡ route
+# equivalence is one a shared semantic bug satisfies trivially.
 ROUTE_OVERRIDES = {
     "salted_unique": ("unique", {"salt_buckets": 4}),
-    "digest_unique": ("unique", {"digest_prefilter": True}),
-    "lowcard_psi": ("drift_psi", {"low_cardinality": True}),
     "guarded_ks": ("drift_ks", {"bounded": False}),
 }
 
@@ -405,15 +413,16 @@ def _token_range_violations_sql(seq: str) -> str:
 @pytest.mark.parametrize("route", ["per_check", "fused"])
 def test_token_range_matches_duckdb(spark, tmp_path, seed, route):
     """Cross-engine oracle for token_range on the hostile corpus (NULL
-    arrays, NULL elements, out-of-window ids), on BOTH execution routes —
-    the fused SQL-string predicate and the Column-DSL per-check predicate
-    must each independently agree with DuckDB's list_filter derivation."""
+    arrays, NULL elements, out-of-window ids): the fused SQL-string
+    predicate must agree with DuckDB's list_filter derivation, both when
+    the check runs alone ("per_check") and when it shares its one scan
+    with a second check ("fused")."""
     df = spark.createDataFrame(_random_rows(seed), SCHEMA)
     path = str(tmp_path / f"tr_{route}_{seed}.parquet")
     df.write.mode("overwrite").parquet(path)
 
     suite = [_TR_CHECK]
-    if route == "fused":   # fusion engages only with a second fusible check
+    if route == "fused":
         suite = suite + [Check("stats", "column_stats", {"value_col": "n_tok"})]
     res = run_checks(spark.read.parquet(path), suite)
     try:

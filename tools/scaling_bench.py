@@ -11,6 +11,7 @@ every check does real work. ``source`` is deliberately skewed (src0 holds
 ~20% of rows) to exercise the salted/AQE skew handling.
 
 Usage:  python tools/scaling_bench.py [n_rows]
+        python tools/scaling_bench.py --run <cores> <n_rows>   (one sample)
 Writes BENCH_SCALING.json and prints one JSON line.
 """
 
@@ -93,6 +94,14 @@ def run_suite(cores: int) -> tuple[float, int]:
 
 def main() -> None:
     import subprocess
+
+    # child mode takes the row count explicitly: with it missing, the cores
+    # argument would be read as the row count and silently build an
+    # N-row fixture
+    if sys.argv[1:2] == ["--run"] and not (
+            len(sys.argv) == 4 and sys.argv[2].isdigit()
+            and sys.argv[3].isdigit()):
+        sys.exit("usage: scaling_bench.py --run <cores> <n_rows>")
 
     if len(sys.argv) > 1 and sys.argv[1] == "--gen":
         generate(N_ROWS)
